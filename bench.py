@@ -442,7 +442,7 @@ DOCS_QUERIES = (
                                   # oracle shape as the histogram).
                                   # Measured ~10 s/call warm (engine
                                   # session, local[32]); the session
-                                  # memo (_DBSCAN_CACHE) keeps repeat
+                                  # memo (_dbscan_assign) keeps repeat
                                   # calls free.
     "dedup_optics_eps_profile",   # round 11: the varying-eps sweep at 20x —
                                   # every group is core at tau=0 and the
@@ -969,7 +969,7 @@ def _compacted_probe(spark, entry_mod) -> dict:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}/*.parquet')"
             )
-    # Warm the star for the compacted dir BEFORE the timed loop: _STAR_CACHE
+    # Warm the star for the compacted dir BEFORE the timed loop: the star memo
     # keys on sf_dir, so the first timed star query would otherwise pay the
     # full star build + cache materialization (round 5 measured: star_q1
     # 1.29 s here vs 0.37 s in the main loop) and compacted_ratio would
@@ -1029,68 +1029,47 @@ def main() -> None:
     # "What's wrong" #3): per-query seconds below are WARM numbers by
     # design (best-of-2 over session-persisted silver relations — the
     # production shape is a checkpointed table built once per corpus);
-    # this makes the amortized one-time cost readable next to them
-    # instead of hiding it inside whichever query runs first.
-    cache_build: dict[str, float] = {}
-
-    def _time_cache(label: str, fn) -> None:
-        t0 = time.perf_counter()
-        try:
-            fn()
-            cache_build[label] = round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # best-effort: never kill the bench
-            print(f"# cache build {label} failed: {exc}", file=sys.stderr)
-            cache_build[label] = -1.0
-
-    from gravity_books_datalakehouse_spark.operators import dedup as _dd
-    from gravity_books_datalakehouse_spark.operators import kmeans as _km
-    from gravity_books_datalakehouse_spark.plans import advanced_queries as _aq
-
-    _time_cache(
-        "shingles", lambda: _dd._cached_shingles(spark, SF_DIR).count()
-    )
-    _time_cache("bigrams", lambda: _dd._cached_bigrams(spark, SF_DIR).count())
-    # localCheckpoint materializes eagerly; no action needed
-    _time_cache("bigram_ids", lambda: _dd._cached_bigram_ids(spark, SF_DIR))
-    _time_cache(
-        "kmeans_fit", lambda: _km._fitted_assignment(spark, SF_DIR).count()
-    )
-    from gravity_books_datalakehouse_spark.operators import similarity as _sim
-
-    _time_cache(
-        "ivf_assign", lambda: _sim._ivf_assigned(spark, SF_DIR).count()
-    )
-    _time_cache("qnorm_hist", lambda: _aq._pooled_cum(spark, SF_DIR))
+    # building the memos here makes their one-time cost readable next to
+    # them instead of hiding it inside whichever query runs first. The
+    # seconds are the memo registry's own build_s (see
+    # plans/_cache.session_memo), keyed by memo name.
     from gravity_books_datalakehouse_spark.operators import components as _cmp
-
-    # shared by the OPTICS eps sweep and the r12 cluster-persistence
-    # cascade (localCheckpoint materializes eagerly)
-    _time_cache(
-        "rep_jaccard", lambda: _cmp._cached_rep_jaccard(spark, SF_DIR)
-    )
-    # the r12 HDBSCAN contracted-CC cascade — one-time cost shared by
-    # dedup_cluster_persistence/_extraction, otherwise invisible behind
-    # their warm best-of-2 rows (VERDICT r12 "What's wrong" #1)
-    _time_cache(
-        "persistence_levels",
-        lambda: _cmp._persistence_levels(spark, SF_DIR),
-    )
+    from gravity_books_datalakehouse_spark.operators import dedup as _dd
+    from gravity_books_datalakehouse_spark.operators import graph as _gr
+    from gravity_books_datalakehouse_spark.operators import kmeans as _km
+    from gravity_books_datalakehouse_spark.operators import similarity as _sim
+    from gravity_books_datalakehouse_spark.plans import advanced_queries as _aq
+    from gravity_books_datalakehouse_spark.plans._cache import MEMOS
     from gravity_books_datalakehouse_spark.streaming import event_queries as _ev
 
-    # the r13 shared survival per-user frame — one-time cost shared by
-    # the seven batch survival ops (localCheckpoint materializes eagerly)
-    _time_cache(
-        "survival_users",
+    for warm_memo in (
+        lambda: _dd._cached_shingles(spark, SF_DIR).count(),
+        lambda: _dd._cached_bigrams(spark, SF_DIR).count(),
+        lambda: _dd._cached_bigram_ids(spark, SF_DIR),
+        lambda: _km._fitted_assignment(spark, SF_DIR).count(),
+        lambda: _sim._ivf_assigned(spark, SF_DIR).count(),
+        lambda: _aq._pooled_cum(spark, SF_DIR),
+        # shared by the OPTICS eps sweep and the r12 cluster-persistence
+        # cascade
+        lambda: _cmp._cached_rep_jaccard(spark, SF_DIR),
+        # the r12 HDBSCAN contracted-CC cascade shared by
+        # dedup_cluster_persistence/_extraction
+        lambda: _cmp._persistence_levels(spark, SF_DIR),
+        # the r13 survival per-user frame shared by the seven batch
+        # survival ops
         lambda: _ev._survival_user_frame(spark, SF_DIR),
-    )
-    from gravity_books_datalakehouse_spark.operators import graph as _gr
-
-    # the r13 shared co-purchase edge list — one-time cost shared by the
-    # six graph ops (localCheckpoint materializes eagerly)
-    _time_cache(
-        "copurchase_edges",
+        # the r13 co-purchase edge list shared by the six graph ops
         lambda: _gr._cached_copurchase_edges(spark, SF_DIR),
-    )
+    ):
+        try:
+            warm_memo()
+        except Exception as exc:  # best-effort: never kill the bench
+            print(f"# cache build failed: {exc}", file=sys.stderr)
+    cache_build = {
+        name: round(m.build_s, 3)
+        for name, m in MEMOS.items()
+        if m.build_s is not None
+    }
     print(f"# cache_build_sec: {cache_build}", file=sys.stderr)
 
     from gravity_books_datalakehouse_spark.metrics import (

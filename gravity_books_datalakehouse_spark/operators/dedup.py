@@ -30,10 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gravity_books_datalakehouse_spark.plans._cache import (
-    evict_other_scales,
-    session_key,
-)
+from gravity_books_datalakehouse_spark.plans._cache import session_memo
 from gravity_books_datalakehouse_spark.plans.operator_queries import (
     lit_rows_df,
     register,
@@ -54,35 +51,24 @@ from gravity_books_datalakehouse_spark.operators.text import (
 NUM_PERM = 8
 BAND_SIZE = 1
 
-#: (applicationId, sf_dir) → persisted shingle / candidate-pair frames.
-#: The generate-then-verify split runs the expensive shingle+minhash
-#: pipeline once per session/scale; verify stages reuse the persisted
-#: intermediates (the 100 TB equivalent is a checkpointed silver table).
-_SHINGLE_CACHE: dict[tuple[int, str], DataFrame] = {}
-_PAIR_CACHE: dict[tuple[int, str], DataFrame] = {}
-#: exact-content group map / collapsed rep-level candidate pairs — the
-#: exact-dedup-FIRST composition (see _cached_exact_groups).
-_GROUP_CACHE: dict[tuple[int, str], DataFrame] = {}
-_REP_PAIR_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo
 def _cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = session_key(spark, sf_dir)
-    if key not in _SHINGLE_CACHE:
-        evict_other_scales(_SHINGLE_CACHE, key)
-        # Persist partitioned by doc_id: the distinct() leaves the frame
-        # hash-partitioned on (doc_id, shingle), under which every
-        # downstream per-doc aggregation (signature matrices, shingle
-        # counts) pays a partial-agg row per (doc × partition) plus an
-        # exchange. Repartitioning once at cache-build time makes all of
-        # them exchange-free — the 100 TB equivalent of bucketing the
-        # silver shingle table by doc_id.
-        _SHINGLE_CACHE[key] = (
-            shingles(load_table(spark, sf_dir, "documents"))
-            .repartition("doc_id")
-            .persist()
-        )
-    return _SHINGLE_CACHE[key]
+    """Persisted (doc_id, shingle) sets. The generate-then-verify split
+    runs the expensive shingle+minhash pipeline once per session/scale;
+    verify stages reuse the persisted intermediates (the 100 TB
+    equivalent is a checkpointed silver table)."""
+    # Persist partitioned by doc_id: the distinct() leaves the frame
+    # hash-partitioned on (doc_id, shingle), under which every
+    # downstream per-doc aggregation (signature matrices, shingle
+    # counts) pays a partial-agg row per (doc × partition) plus an
+    # exchange. Repartitioning once at cache-build time makes all of
+    # them exchange-free — the 100 TB equivalent of bucketing the
+    # silver shingle table by doc_id.
+    return (
+        shingles(load_table(spark, sf_dir, "documents"))
+        .repartition("doc_id")
+        .persist()
+    )
 
 
 @register(
@@ -162,6 +148,7 @@ _MINHASH_SQL = f"""WITH {SHINGLES_SQL},
     "dedup_minhash_lsh_pairs",
     _MINHASH_SQL + "\nSELECT doc_a, doc_b FROM pairs",
 )
+@session_memo
 def dedup_minhash_lsh_pairs(spark, sf_dir):
     """MinHash+LSH candidate pairs: docs sharing any banded signature.
 
@@ -170,17 +157,13 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
     16-byte digest with ~uniform distribution — no skew, broadcast-free,
     scales linearly in corpus size.
     """
-    key = session_key(spark, sf_dir)
-    if key in _PAIR_CACHE:
-        return _PAIR_CACHE[key]
-    evict_other_scales(_PAIR_CACHE, key)
     sigs = minhash_signatures(_cached_shingles(spark, sf_dir))
     bands = sigs.select(
         "doc_id", F.col("p").alias("band_idx"), F.col("sig").alias("band_key")
     )
     a = bands.alias("a")
     b = bands.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -191,8 +174,6 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
         .distinct()
         .persist()
     )
-    _PAIR_CACHE[key] = pairs
-    return pairs
 
 
 # --------------------------------------------------------------------------
@@ -219,29 +200,27 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
 # is recoverable from (rep pairs, per-group multiplicities).
 
 
+@session_memo
 def _cached_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, rep_doc_id, mult): md5-exact content groups over the
     normalized text, rep = MIN(doc_id) of the group, mult = group size.
     One digest-keyed groupBy + one digest-keyed join back — the text
     never shuffles; partial aggregation absorbs heavy groups map-side."""
-    key = session_key(spark, sf_dir)
-    if key not in _GROUP_CACHE:
-        evict_other_scales(_GROUP_CACHE, key)
-        docs = load_table(spark, sf_dir, "documents")
-        norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-        fps = docs.select(F.md5(norm).alias("content_fp"), "doc_id")
-        groups = fps.groupBy("content_fp").agg(
-            F.min("doc_id").alias("rep_doc_id"),
-            F.count(F.lit(1)).cast("bigint").alias("mult"),
-        )
-        _GROUP_CACHE[key] = (
-            fps.join(groups, "content_fp")
-            .select("doc_id", "rep_doc_id", "mult")
-            .persist()
-        )
-    return _GROUP_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
+    fps = docs.select(F.md5(norm).alias("content_fp"), "doc_id")
+    groups = fps.groupBy("content_fp").agg(
+        F.min("doc_id").alias("rep_doc_id"),
+        F.count(F.lit(1)).cast("bigint").alias("mult"),
+    )
+    return (
+        fps.join(groups, "content_fp")
+        .select("doc_id", "rep_doc_id", "mult")
+        .persist()
+    )
 
 
+@session_memo
 def _cached_rep_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rep-level LSH candidate pairs (doc_a < doc_b, both group reps):
     the banded self-join of dedup_minhash_lsh_pairs restricted to one
@@ -249,36 +228,32 @@ def _cached_rep_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature bytes (reps are real docs), but the input is |groups|
     rows instead of |docs| — under k-fold verbatim duplication the
     clique mass disappears from the join entirely."""
-    key = session_key(spark, sf_dir)
-    if key not in _REP_PAIR_CACHE:
-        evict_other_scales(_REP_PAIR_CACHE, key)
-        reps = (
-            _cached_exact_groups(spark, sf_dir)
-            .where(F.col("doc_id") == F.col("rep_doc_id"))
-            .select("doc_id")
+    reps = (
+        _cached_exact_groups(spark, sf_dir)
+        .where(F.col("doc_id") == F.col("rep_doc_id"))
+        .select("doc_id")
+    )
+    sh = _cached_shingles(spark, sf_dir).join(reps, "doc_id", "leftsemi")
+    sigs = minhash_signatures(sh)
+    bands = sigs.select(
+        "doc_id", F.col("p").alias("band_idx"), F.col("sig").alias("band_key")
+    )
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        sh = _cached_shingles(spark, sf_dir).join(reps, "doc_id", "leftsemi")
-        sigs = minhash_signatures(sh)
-        bands = sigs.select(
-            "doc_id", F.col("p").alias("band_idx"), F.col("sig").alias("band_key")
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
-        a = bands.alias("a")
-        b = bands.alias("b")
-        _REP_PAIR_CACHE[key] = (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-            .persist()
-        )
-    return _REP_PAIR_CACHE[key]
+        .distinct()
+        .persist()
+    )
 
 
 def _rep_minhash_sql() -> str:
@@ -895,26 +870,18 @@ GROUP BY doc_id, island
 ORDER BY doc_id, span_start"""
 
 
-#: (applicationId, sf_dir) → persisted frames shared across the substring
-#: family: _DW_CACHE holds the duplicated-window positions (the expensive
-#: rolling-hash pipeline — consumed by spans, rate, and the removal
-#: rewrite), _SPAN_CACHE the merged maximal spans derived from it (the
-#: 100 TB equivalent is a checkpointed dup-span silver table).
-_DW_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SPAN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def _cached_dup_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = session_key(spark, sf_dir)
-    if key not in _DW_CACHE:
-        evict_other_scales(_DW_CACHE, key)
-        _DW_CACHE[key] = dup_windows(
-            load_table(spark, sf_dir, "documents"), _SPAN_K
-        ).persist()
-    return _DW_CACHE[key]
+    """Persisted duplicated-window positions, shared across the substring
+    family: the expensive rolling-hash pipeline, consumed by spans, rate,
+    and the removal rewrite (the 100 TB equivalent is a checkpointed
+    dup-span silver table; dedup_substring_spans memoizes the merged
+    spans derived from it)."""
+    return dup_windows(load_table(spark, sf_dir, "documents"), _SPAN_K).persist()
 
 
 @register("dedup_substring_spans", _SUBSTRING_SPAN_SQL)
+@session_memo
 def dedup_substring_spans(spark, sf_dir):
     """Maximal cross-document duplicated substrings (>= 8 tokens) per
     document, as (span_start, span_end) token ranges — the substring
@@ -931,15 +898,9 @@ def dedup_substring_spans(spark, sf_dir):
     windows into maximal spans. At 100 TB every stage is linear and
     keyed by either doc_id or a digest; the hash groupBy is the only
     wide shuffle and carries 16-byte keys."""
-    key = session_key(spark, sf_dir)
-    if key in _SPAN_CACHE:
-        return _SPAN_CACHE[key]
-    evict_other_scales(_SPAN_CACHE, key)
-    spans = spans_from_dup_windows(
+    return spans_from_dup_windows(
         _cached_dup_windows(spark, sf_dir), _SPAN_K
     ).persist()
-    _SPAN_CACHE[key] = spans
-    return spans
 
 
 def dup_windows(docs: DataFrame, k: int = _SPAN_K) -> DataFrame:
@@ -1454,59 +1415,47 @@ def dedup_fuzzy_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PPJOIN_NUM2 = 16  # t^2 numerator
 _PPJOIN_DEN2 = 25  # t^2 denominator
 
-#: (applicationId, sf_dir) -> persisted distinct (doc_id, bigram) sets,
-#: repartitioned by doc_id like the 3-shingle cache (same rationale).
-_BIGRAM_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo
 def _cached_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = session_key(spark, sf_dir)
-    if key not in _BIGRAM_CACHE:
-        evict_other_scales(_BIGRAM_CACHE, key)
-        _BIGRAM_CACHE[key] = (
-            shingles(load_table(spark, sf_dir, "documents"), k=2)
-            .repartition("doc_id")
-            .persist()
-        )
-    return _BIGRAM_CACHE[key]
+    """Persisted distinct (doc_id, bigram) sets, repartitioned by doc_id
+    like the 3-shingle cache (same rationale)."""
+    return (
+        shingles(load_table(spark, sf_dir, "documents"), k=2)
+        .repartition("doc_id")
+        .persist()
+    )
 
 
-#: (applicationId, sf_dir) -> (doc_id, tid) integer-interned bigram sets.
-#: String bigrams (~15 bytes, string hashing/equality) dominate the
-#: PPJoin candidate join and the per-pair array_intersect verify; an
-#: injective shingle -> long mapping makes both stages primitive-typed.
-#: monotonically_increasing_id over the DISTINCT vocabulary is exact
-#: (unique by construction, JVM-only, no single-task window and no
-#: Python round trip); localCheckpoint MATERIALIZES the mapping so every
-#: downstream branch reads the same frozen ids — ids may differ across
-#: sessions, which is harmless because the PPJoin output never exposes
-#: a token, only set sizes and overlap counts.
-_BIGRAM_ID_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+@session_memo
 def _cached_bigram_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = session_key(spark, sf_dir)
-    if key not in _BIGRAM_ID_CACHE:
-        evict_other_scales(_BIGRAM_ID_CACHE, key)
-        bg = _cached_bigrams(spark, sf_dir)
-        vocab = (
-            bg.select("shingle")
-            .distinct()
-            .withColumn("tid", F.monotonically_increasing_id())
-        )
-        # EXPLICIT partition count: a bare repartition("doc_id") lets AQE
-        # coalesce to advisory size (2 partitions at sf0.1), the
-        # localCheckpoint freezes that layout, and every downstream
-        # doc-keyed aggregate/join then reuses the 2-partition
-        # co-partitioning — the whole verify ran 2-wide (measured 14.9 s
-        # vs 3.4 s). Same lesson as the fuzzy-dedup block stage above.
-        _BIGRAM_ID_CACHE[key] = (
-            bg.join(vocab, "shingle")
-            .select("doc_id", "tid")
-            .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-            .localCheckpoint()
-        )
-    return _BIGRAM_ID_CACHE[key]
+    """(doc_id, tid) integer-interned bigram sets. String bigrams (~15
+    bytes, string hashing/equality) dominate the PPJoin candidate join
+    and the per-pair array_intersect verify; an injective shingle -> long
+    mapping makes both stages primitive-typed. monotonically_increasing_id
+    over the DISTINCT vocabulary is exact (unique by construction,
+    JVM-only, no single-task window and no Python round trip);
+    localCheckpoint MATERIALIZES the mapping so every downstream branch
+    reads the same frozen ids — ids may differ across sessions, which is
+    harmless because the PPJoin output never exposes a token, only set
+    sizes and overlap counts."""
+    bg = _cached_bigrams(spark, sf_dir)
+    vocab = (
+        bg.select("shingle")
+        .distinct()
+        .withColumn("tid", F.monotonically_increasing_id())
+    )
+    # EXPLICIT partition count: a bare repartition("doc_id") lets AQE
+    # coalesce to advisory size (2 partitions at sf0.1), the
+    # localCheckpoint freezes that layout, and every downstream
+    # doc-keyed aggregate/join then reuses the 2-partition
+    # co-partitioning — the whole verify ran 2-wide (measured 14.9 s
+    # vs 3.4 s). Same lesson as the fuzzy-dedup block stage above.
+    return (
+        bg.join(vocab, "shingle")
+        .select("doc_id", "tid")
+        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .localCheckpoint()
+    )
 
 
 #: DuckDB twin of the distinct word-bigram sets (k=2 sibling of

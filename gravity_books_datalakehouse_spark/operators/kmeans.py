@@ -32,22 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gravity_books_datalakehouse_spark.plans._cache import session_memo
 from gravity_books_datalakehouse_spark.plans.operator_queries import register
 from gravity_books_datalakehouse_spark.sources.catalog import load_table
 
 K = 16
 N_ITER = 5
-
-#: (applicationId, sf_dir) → persisted embeddings reused across the
-#: iterative sweeps (6 scans otherwise; same pattern as similarity.py).
-_EMB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: (applicationId, sf_dir) → fitted centroid dict {cid: [d floats]}. The
-#: Lloyd fit is deterministic per session/scale (fixed init = vec_id<k,
-#: fixed sweep count), so repeat calls — e.g. bench best-of-2 — reuse the
-#: k×d model instead of re-running 5 iterative sweeps. Model state only:
-#: bytes held are k×d floats on the driver, never row data.
-_MODEL_CACHE: dict[tuple[str, str], dict[int, list[float]]] = {}
 
 
 def _assign(e: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
@@ -290,36 +280,42 @@ def sim_kmeans_refine(spark, sf_dir):
     )
 
 
+@session_memo
+def _cached_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted embeddings reused across the iterative sweeps (6 scans
+    otherwise; same pattern as similarity.py)."""
+    # Repartition the cached corpus to the session's parallelism:
+    # the argmin fold is a Catalyst higher-order function
+    # (interpreted, not codegen'd — the dominant per-row cost), and
+    # a single-split embeddings file would otherwise run every
+    # sweep's fold in ONE task (measured: the 5-sweep fit drops
+    # ~1.6 s -> ~0.5 s at sf0.1 on local[8]). Summation order in
+    # the centroid means shifts with the layout; the oracle's
+    # documented rounding margins (~1e-13 drift vs 3-dp rounding)
+    # already cover exactly this, re-verified at all three SFs.
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .repartition(max(spark.sparkContext.defaultParallelism, 8))
+        .persist()
+    )
+
+
+@session_memo
+def _fitted_model(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
+    """Fitted centroid dict {cid: [d floats]}. The Lloyd fit is
+    deterministic per session/scale (fixed init = vec_id<k, fixed sweep
+    count), so repeat calls — e.g. bench best-of-2 — reuse the k×d model
+    instead of re-running 5 iterative sweeps. Model state only: bytes
+    held are k×d floats on the driver, never row data."""
+    return kmeans_fit(spark, _cached_embeddings(spark, sf_dir))
+
+
 def _fitted_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, cluster_id, d2) against the memoized
     deterministic fit — the shared entry point for every query that
     consumes the fitted model (refine rollup, semantic dedup)."""
-    from gravity_books_datalakehouse_spark.plans._cache import (
-        evict_other_scales,
-        session_key,
-    )
-
-    key = session_key(spark, sf_dir)
-    if key not in _EMB_CACHE:
-        evict_other_scales(_EMB_CACHE, key)
-        # Repartition the cached corpus to the session's parallelism:
-        # the argmin fold is a Catalyst higher-order function
-        # (interpreted, not codegen'd — the dominant per-row cost), and
-        # a single-split embeddings file would otherwise run every
-        # sweep's fold in ONE task (measured: the 5-sweep fit drops
-        # ~1.6 s -> ~0.5 s at sf0.1 on local[8]). Summation order in
-        # the centroid means shifts with the layout; the oracle's
-        # documented rounding margins (~1e-13 drift vs 3-dp rounding)
-        # already cover exactly this, re-verified at all three SFs.
-        _EMB_CACHE[key] = (
-            load_table(spark, sf_dir, "embeddings")
-            .repartition(max(spark.sparkContext.defaultParallelism, 8))
-            .persist()
-        )
-    if key not in _MODEL_CACHE:
-        evict_other_scales(_MODEL_CACHE, key)
-        _MODEL_CACHE[key] = kmeans_fit(spark, _EMB_CACHE[key])
-    return _assign(_EMB_CACHE[key], _MODEL_CACHE[key])
+    emb = _cached_embeddings(spark, sf_dir)
+    return _assign(emb, _fitted_model(spark, sf_dir))
 
 
 #: Semantic-dup cosine threshold, applied to the 6-dp-rounded score on

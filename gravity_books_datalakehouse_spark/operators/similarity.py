@@ -27,10 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gravity_books_datalakehouse_spark.plans._cache import (
-    evict_other_scales,
-    session_key,
-)
+from gravity_books_datalakehouse_spark.plans._cache import session_memo
 from gravity_books_datalakehouse_spark.plans.operator_queries import register
 from gravity_books_datalakehouse_spark.sources.catalog import load_table
 
@@ -42,21 +39,15 @@ _DIM_OFF = 32
 _TOPK_QUERIES = 10
 _TOPK = 5
 
-#: (applicationId, sf_dir) → persisted (vec_id, embedding, sig) frame reused
-#: by every bucketed operator (signature computed once per session/scale).
-_SIG_CACHE: dict[tuple[int, str], "DataFrame"] = {}
-
-
+@session_memo
 def _signed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = session_key(spark, sf_dir)
-    if key not in _SIG_CACHE:
-        evict_other_scales(_SIG_CACHE, key)
-        e = load_table(spark, sf_dir, "embeddings")
-        _SIG_CACHE[key] = e.select(
-            "vec_id", "embedding", "label",
-            _signature_spark("embedding").alias("sig"),
-        ).persist()
-    return _SIG_CACHE[key]
+    """Persisted (vec_id, embedding, label, sig) frame reused by every
+    bucketed operator (signature computed once per session/scale)."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return e.select(
+        "vec_id", "embedding", "label",
+        _signature_spark("embedding").alias("sig"),
+    ).persist()
 
 
 def _dot(a: str, b: str) -> Column:
@@ -644,26 +635,17 @@ def _ivf_assign(e: DataFrame) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) → persisted IVF assignment. The per-call
-#: recompute of the full-corpus centroid assignment was the measured
-#: reason sim_ivf_topk read SLOWER than brute force at the 20× docs
-#: replica (BENCH_r08–r10 docs_replica_probe ratio 5.6→9.1→10.3, 11.0 s
-#: vs 6.3 s): three registry entries each rebuilt the same corpus×k
-#: broadcast pass. Same idiom as _SIG_CACHE / dedup._REP_PAIR_CACHE —
-#: built once per (session, scale), other scales evicted, one-time cost
-#: surfaced in bench cache_build_sec["ivf_assign"]. At production scale
-#: this is the "pre-partition the corpus by cluster_id" step the search
-#: docstrings name — an index you build once, not per query.
-_IVF_ASSIGN_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
+@session_memo
 def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = session_key(spark, sf_dir)
-    if key not in _IVF_ASSIGN_CACHE:
-        evict_other_scales(_IVF_ASSIGN_CACHE, key)
-        e = load_table(spark, sf_dir, "embeddings")
-        _IVF_ASSIGN_CACHE[key] = _ivf_assign(e).persist()
-    return _IVF_ASSIGN_CACHE[key]
+    """Persisted IVF assignment. The per-call recompute of the
+    full-corpus centroid assignment was the measured reason sim_ivf_topk
+    read SLOWER than brute force at the 20× docs replica (BENCH_r08–r10
+    docs_replica_probe ratio 5.6→9.1→10.3, 11.0 s vs 6.3 s): three
+    registry entries each rebuilt the same corpus×k broadcast pass. At
+    production scale this is the "pre-partition the corpus by cluster_id"
+    step the search docstrings name — an index you build once, not per
+    query."""
+    return _ivf_assign(load_table(spark, sf_dir, "embeddings")).persist()
 
 
 _IVF_ASSIGN_SQL = f"""cent AS (

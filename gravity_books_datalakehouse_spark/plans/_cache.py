@@ -1,18 +1,133 @@
-"""Session-scoped memo keys for persisted intermediate DataFrames.
+"""Per-session memos for the engine's shared intermediates.
 
-Keyed by Spark applicationId (unique per session), NOT ``id(spark)`` —
-CPython reuses object ids after GC, so an id-keyed cache could hand a
-DataFrame of a stopped session to a new one. A driver that builds a
-fresh SparkSession per query gets a fresh cache entry per session.
+The reference materializes its gold layer once and every query reads it;
+this engine does the same per session with memos: the first call for a
+(session, sf_dir) builds an intermediate (a persisted or
+localCheckpointed frame, or driver-side model state) and later calls
+return it. Every memo is a function decorated with ``session_memo``,
+which owns the whole contract:
+
+- **Key** ``(applicationId, sf_dir, *rest)``. applicationId is unique per
+  session, unlike ``id(spark)``: CPython reuses object ids after GC, so
+  an id-keyed memo could hand a stopped session's frame to a new one.
+- **Scale eviction.** Building for an sf_dir frees this session's
+  entries for every other sf_dir, so a session sweeping sf0.001 → sf0.1
+  holds one scale per memo. Other sessions' entries are untouched.
+- **Storage.** An entry owns its value's persisted frames and every
+  localCheckpoint RDD its build left behind, including checkpoints the
+  final frame no longer references (they would otherwise stay cached
+  until a JVM GC happens to run). Freeing an entry releases all of it
+  at once; ``clear_session_caches()`` frees every entry. A frame derived
+  from an entry before it was freed may rest on a freed checkpoint:
+  rebuild it through the memo instead of reading it again.
+- **Build seconds** per memo, in ``MEMOS[name].build_s``.
+
+``MEMOS`` is the registry: one ``Memo`` per decorated function, named
+``"<module>.<function>"``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import functools
+import time
+from dataclasses import dataclass, field
+
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 
-def session_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
+@dataclass
+class Memo:
+    """One memoized function: ``entries`` maps a key to (value, ids of the
+    checkpoint RDDs the entry owns); ``build_s`` is the wall seconds of
+    its latest build."""
+
+    entries: dict = field(default_factory=dict)
+    build_s: float | None = None
+
+
+MEMOS: dict[str, Memo] = {}
+
+
+def session_memo(fn):
+    """Memoize ``fn(spark, sf_dir, *rest)`` per (session, sf_dir, *rest).
+
+    A hit reads only ``applicationId`` from the JVM. A build runs no
+    Spark job of its own: it evicts this session's other-scale entries,
+    calls ``fn``, and claims the localCheckpoint RDDs that appeared
+    during the call and that no other entry owns (a nested memo build
+    registers its own first). ``build_s`` is the wall seconds of that
+    call, so it INCLUDES the nested memo builds ``fn`` triggers; a
+    ``persist()`` memo's seconds cover planning only, because the frame
+    materializes on its first action, which its first reader pays."""
+    memo = MEMOS.setdefault(
+        f"{fn.__module__.rsplit('.', 1)[-1]}.{fn.__name__}", Memo()
+    )
+
+    @functools.wraps(fn)
+    def memoized(spark: SparkSession, sf_dir: str, *rest):
+        app = spark.sparkContext.applicationId
+        key = (app, sf_dir, *rest)
+        if key in memo.entries:
+            return memo.entries[key][0]
+        for stale in [k for k in memo.entries if k[0] == app and k[1] != sf_dir]:
+            _free(app, *memo.entries.pop(stale))
+        jsc = spark.sparkContext._jsc
+        before = _persistent_rdd_ids(jsc)
+        t0 = time.perf_counter()
+        value = fn(spark, sf_dir, *rest)
+        memo.build_s = time.perf_counter() - t0
+        claimed = {
+            i
+            for m in MEMOS.values()
+            for k, (_, ids) in m.entries.items()
+            if k[0] == app
+            for i in ids
+        }
+        rdds = jsc.getPersistentRDDs()
+        memo.entries[key] = (value, [
+            i for i in _persistent_rdd_ids(jsc) - before - claimed
+            if rdds.get(i).rdd().isLocallyCheckpointed()
+        ])
+        return value
+
+    return memoized
+
+
+def _persistent_rdd_ids(jsc) -> set[int]:
+    """Ids of the context's persisted RDDs, in one JVM round trip
+    (iterating the py4j key set costs one per RDD)."""
+    ids = jsc.getPersistentRDDs().keySet().toString().strip("[]")
+    return {int(i) for i in ids.split(",") if i.strip()}
+
+
+def _free(app: str, value, rdd_ids: list[int]) -> None:
+    """Release an entry's storage: unpersist its persisted frames and its
+    checkpoint RDDs (``DataFrame.unpersist()`` is a no-op on a
+    localCheckpoint frame). Blocking, so the storage is gone on return.
+    An entry of a stopped session has nothing left to free."""
+    sc = SparkContext._active_spark_context
+    if sc is None or sc.applicationId != app:
+        return
+    for df in value.values() if isinstance(value, dict) else [value]:
+        if isinstance(df, DataFrame):
+            df.unpersist(blocking=True)
+    rdds = sc._jsc.getPersistentRDDs()
+    for i in rdd_ids:
+        rdd = rdds.get(i)
+        if rdd is not None:  # the JVM's ContextCleaner may have freed it
+            rdd.unpersist(True)
+
+
+def clear_session_caches() -> None:
+    """Free and forget every memo entry of every session.
+
+    For long-lived sessions that sweep many scale factors or corpora.
+    Safe to call between workloads: the next call simply rebuilds."""
+    for memo in MEMOS.values():
+        for key, (value, rdd_ids) in memo.entries.items():
+            _free(key[0], value, rdd_ids)
+        memo.entries.clear()
 
 
 def rows_based_partitions(
@@ -36,71 +151,26 @@ def rows_based_partitions(
     ))
 
 
-def evict_other_scales(registry: dict, key: tuple[str, str]) -> None:
-    """Unpersist and drop this session's entries for OTHER sf_dirs before
-    ``key`` is inserted. Bounds each memo registry to one scale per live
-    session: a long-lived session sweeping sf0.001 → sf0.01 → sf0.1 no
-    longer accumulates persisted tables for every scale it ever touched
-    (executor-memory leak flagged in round 1). Other sessions' entries
-    are untouched."""
-    app, sf = key
-    for stale in [k for k in registry if k[0] == app and k[1] != sf]:
-        value = registry.pop(stale)
-        frames = value.values() if isinstance(value, dict) else [value]
-        for df in frames:
-            if not hasattr(df, "unpersist"):
-                continue  # model-state entry (e.g. centroid dicts), no storage
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped
+def checkpoint_by_rows(
+    spark: SparkSession,
+    df: DataFrame,
+    rows_per_task: int,
+    col: str,
+    keep_matching_width: bool,
+) -> DataFrame:
+    """``df`` localCheckpointed with its width sized from its rows.
 
-
-def clear_session_caches() -> None:
-    """Unpersist and forget every memoized intermediate (star tables,
-    shingles, candidate pairs, signed embeddings) across all sessions.
-
-    For long-lived sessions that sweep many scale factors: each
-    (applicationId, sf_dir) memo pins executor storage until cleared.
-    Safe to call between workloads — the next query simply rebuilds."""
-    from gravity_books_datalakehouse_spark.operators import (
-        components,
-        dedup,
-        graph,
-        kmeans,
-        similarity,
-    )
-    from gravity_books_datalakehouse_spark.plans import star
-    from gravity_books_datalakehouse_spark.streaming import event_queries
-
-    for registry in (
-        star._STAR_CACHE,
-        event_queries._SURV_CACHE,
-        graph._EDGE_CACHE,
-        dedup._SHINGLE_CACHE,
-        dedup._PAIR_CACHE,
-        dedup._GROUP_CACHE,
-        dedup._REP_PAIR_CACHE,
-        dedup._DW_CACHE,
-        dedup._SPAN_CACHE,
-        similarity._SIG_CACHE,
-        similarity._IVF_ASSIGN_CACHE,
-        kmeans._EMB_CACHE,
-        kmeans._MODEL_CACHE,
-        components._CC_CACHE,
-        components._DBSCAN_CACHE,
-        components._REP_JACCARD_CACHE,
-        components._PERSISTENCE_CACHE,
-        components._PLEVELS_CACHE,
-        components._EXTRACTION_CACHE,
-    ):
-        for value in registry.values():
-            frames = value.values() if isinstance(value, dict) else [value]
-            for df in frames:
-                if not hasattr(df, "unpersist"):
-                    continue  # model-state entry, holds no executor storage
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # session already stopped
-        registry.clear()
+    Checkpoints once (AQE-sized), counts the materialized rows (no second
+    pass over the inputs), then ``repartition(p, col)`` with
+    ``p = rows_based_partitions(...)`` and checkpoints again; the re-layout
+    shuffles only the compact materialized rows. The first checkpoint is
+    freed once the second exists, so the result pins one cached RDD.
+    With ``keep_matching_width`` the first checkpoint is returned as is
+    when it already has ``p`` partitions."""
+    first = df.localCheckpoint()
+    p = rows_based_partitions(spark, first.count(), rows_per_task)
+    if keep_matching_width and first.rdd.getNumPartitions() == p:
+        return first
+    out = first.repartition(p, col).localCheckpoint()
+    first._jdf.queryExecution().logical().rdd().unpersist(True)
+    return out

@@ -36,10 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gravity_books_datalakehouse_spark.plans._cache import (
-    evict_other_scales,
-    session_key,
-)
+from gravity_books_datalakehouse_spark.plans._cache import session_memo
 from gravity_books_datalakehouse_spark.functions.datekit import date_dim_from_bounds
 from gravity_books_datalakehouse_spark.operators.joins import equi_join
 from gravity_books_datalakehouse_spark.operators.surrogate_keys import add_surrogate_key
@@ -78,27 +75,17 @@ def _fact_cache_partitions(spark: SparkSession, n_rows: int) -> int:
     return int(max(2, min(spark.sparkContext.defaultParallelism, by_size)))
 
 
-#: (applicationId, sf_dir) → persisted star tables. The five reference
-#: queries (and any user session) share one materialization of the star —
-#: the reference gets the same effect from its gold-layer Parquet
-#: round-trip; here persist() keeps it columnar in executor memory/disk.
-_STAR_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-
-def build_star(
-    spark: SparkSession, sf_dir: str, *, cache: bool = True
-) -> dict[str, DataFrame]:
-    """Build the five star tables as lazy DataFrames (memoized+persisted
-    per session/scale; pass cache=False for a fresh un-persisted plan)."""
-    key = session_key(spark, sf_dir)
-    if cache and key in _STAR_CACHE:
-        return _STAR_CACHE[key]
+@session_memo
+def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The five star tables, persisted and memoized per session/scale. The
+    five reference queries (and any user session) share one
+    materialization of the star — the reference gets the same effect from
+    its gold-layer Parquet round-trip; here persist() keeps it columnar in
+    executor memory/disk. ``_build_star_plans`` gives fresh un-persisted
+    plans."""
     tables = _build_star_plans(spark, sf_dir)
-    if cache:
-        evict_other_scales(_STAR_CACHE, key)
-        for df in tables.values():
-            df.persist()
-        _STAR_CACHE[key] = tables
+    for df in tables.values():
+        df.persist()
     return tables
 
 

@@ -20,6 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gravity_books_datalakehouse_spark.plans._cache import (
+    checkpoint_by_rows,
+    session_memo,
+)
 from gravity_books_datalakehouse_spark.plans.operator_queries import (
     _cents,
     _money_sum,
@@ -3214,18 +3218,11 @@ _KM_HORIZONS_H = (240, 360, 480, 600)
 #: Per-user rows per task for the shared survival frame's layout (see
 #: _survival_user_frame): each user row fans into multiple downstream
 #: histogram/horizon passes, so tasks stay worthwhile well below
-#: byte-based sizing; env-overridable for cluster tuning.
-import os as _os
-
-_SURV_ROWS_PER_TASK = int(
-    _os.environ.get("GRAVITY_SURV_ROWS_PER_TASK", "200")
-)
-
-#: (applicationId, sf_dir) → checkpointed per-user survival frame shared
-#: by the whole survival family (see _survival_user_frame).
-_SURV_CACHE: dict = {}
+#: byte-based sizing.
+_SURV_ROWS_PER_TASK = 200
 
 
+@session_memo
 def _survival_user_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE checkpointed per-user frame feeding the whole survival family
     (KM, Nelson-Aalen bands, RMST, log-rank, hazard ratio, stratified
@@ -3249,100 +3246,79 @@ def _survival_user_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from gravity_books_datalakehouse_spark.plans._cache import (
-        evict_other_scales,
-        session_key,
+    e = load_events(spark, sf_dir)
+    t0 = e.groupBy("user_id").agg(
+        F.min("ts").alias("t0"),
+        F.max("ts").alias("le"),
+        F.count(F.lit(1)).cast("bigint").alias("cnt"),
     )
-
-    key = session_key(spark, sf_dir)
-    if key not in _SURV_CACHE:
-        evict_other_scales(_SURV_CACHE, key)
-        e = load_events(spark, sf_dir)
-        t0 = e.groupBy("user_id").agg(
-            F.min("ts").alias("t0"),
-            F.max("ts").alias("le"),
-            F.count(F.lit(1)).cast("bigint").alias("cnt"),
+    we = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    coh = (
+        e.withColumn("rn", F.row_number().over(we))
+        .where(F.col("rn") == 1)
+        .select(
+            "user_id",
+            F.when(F.col("event_type") == "error", 1)
+            .otherwise(0)
+            .alias("g"),
         )
-        we = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        coh = (
-            e.withColumn("rn", F.row_number().over(we))
-            .where(F.col("rn") == 1)
-            .select(
-                "user_id",
-                F.when(F.col("event_type") == "error", 1)
-                .otherwise(0)
-                .alias("g"),
+    )
+    te = (
+        e.where(F.col("event_type") == "error")
+        .withColumn("rn", F.row_number().over(we))
+        .where(F.col("rn") == _KM_BUDGET)
+        .select("user_id", F.col("ts").alias("te"))
+    )
+    tc = (
+        e.where(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("tc"))
+    )
+    exh_first = F.col("te").isNotNull() & (
+        F.col("tc").isNull() | (F.col("te") <= F.col("tc"))
+    )
+    users = (
+        t0.join(coh, "user_id")
+        .join(te, "user_id", "left")
+        .join(tc, "user_id", "left")
+        .select(
+            "user_id",
+            "g",
+            "cnt",
+            (
+                F.unix_timestamp(F.coalesce("te", "le"))
+                - F.unix_timestamp("t0")
+            ).alias("d"),
+            F.when(F.col("te").isNotNull(), 1).otherwise(0).alias("ev"),
+            F.when(
+                exh_first,
+                F.unix_timestamp("te") - F.unix_timestamp("t0"),
             )
-        )
-        te = (
-            e.where(F.col("event_type") == "error")
-            .withColumn("rn", F.row_number().over(we))
-            .where(F.col("rn") == _KM_BUDGET)
-            .select("user_id", F.col("ts").alias("te"))
-        )
-        tc = (
-            e.where(F.col("event_type") == "purchase")
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("tc"))
-        )
-        exh_first = F.col("te").isNotNull() & (
-            F.col("tc").isNull() | (F.col("te") <= F.col("tc"))
-        )
-        _SURV_CACHE[key] = (
-            t0.join(coh, "user_id")
-            .join(te, "user_id", "left")
-            .join(tc, "user_id", "left")
-            .select(
-                "user_id",
-                "g",
-                "cnt",
-                (
-                    F.unix_timestamp(F.coalesce("te", "le"))
-                    - F.unix_timestamp("t0")
-                ).alias("d"),
-                F.when(F.col("te").isNotNull(), 1).otherwise(0).alias("ev"),
-                F.when(
-                    exh_first,
-                    F.unix_timestamp("te") - F.unix_timestamp("t0"),
-                )
-                .when(
-                    F.col("tc").isNotNull(),
-                    F.unix_timestamp("tc") - F.unix_timestamp("t0"),
-                )
-                .otherwise(
-                    F.unix_timestamp("le") - F.unix_timestamp("t0")
-                )
-                .alias("dc"),
-                F.when(exh_first, 1)
-                .when(F.col("tc").isNotNull(), 2)
-                .otherwise(0)
-                .alias("cause"),
+            .when(
+                F.col("tc").isNotNull(),
+                F.unix_timestamp("tc") - F.unix_timestamp("t0"),
             )
-            # explicit-count repartition: AQE coalesces the tiny join
-            # output to ONE partition, and a 1-partition checkpoint
-            # serializes every downstream histogram pass (measured:
-            # km 4.1 s → 1.3 s after repartitioning; the r8 "pin
-            # compact-but-CPU-bound stages" lesson)
-            .localCheckpoint()
+            .otherwise(
+                F.unix_timestamp("le") - F.unix_timestamp("t0")
+            )
+            .alias("dc"),
+            F.when(exh_first, 1)
+            .when(F.col("tc").isNotNull(), 2)
+            .otherwise(0)
+            .alias("cause"),
         )
-        # Round 14 (VERDICT r13 item 5): width from ROWS, not core count
-        # — defaultParallelism put a ~1.5k-user frame on 32
-        # micro-partitions at 32 cores, and the per-sweep scheduling
-        # floor made the driver's 32-core run slower than its 8-core run
-        # on ev_survival_*. Count reads the materialized checkpoint (not
-        # a second corpus pass); the re-checkpoint shuffles only the
-        # compact per-user rows.
-        from gravity_books_datalakehouse_spark.plans._cache import (
-            rows_based_partitions,
-        )
-
-        p = rows_based_partitions(
-            spark, _SURV_CACHE[key].count(), _SURV_ROWS_PER_TASK
-        )
-        _SURV_CACHE[key] = (
-            _SURV_CACHE[key].repartition(p, "user_id").localCheckpoint()
-        )
-    return _SURV_CACHE[key]
+    )
+    # Layout: AQE coalesces the tiny join output to ONE partition, and
+    # a 1-partition checkpoint serializes every downstream histogram
+    # pass (measured: km 4.1 s → 1.3 s after repartitioning; the r8 "pin
+    # compact-but-CPU-bound stages" lesson). Round 14 (VERDICT r13 item
+    # 5): width from ROWS, not core count — defaultParallelism put a
+    # ~1.5k-user frame on 32 micro-partitions at 32 cores, and the
+    # per-sweep scheduling floor made the 32-core run slower
+    # than the 8-core run on ev_survival_*.
+    return checkpoint_by_rows(
+        spark, users, _SURV_ROWS_PER_TASK, "user_id", keep_matching_width=False
+    )
 
 _KM_SQL = f"""WITH t0 AS (
       SELECT user_id, MIN(ts::TIMESTAMP) AS t0, MAX(ts::TIMESTAMP) AS le

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gravity_books_datalakehouse_spark.operators import (
@@ -118,9 +119,9 @@ def test_surrogate_key_dense_plan_has_no_data_path_single_partition(spark):
 def test_star_dim_build_has_no_global_window(spark):
     """The star dims use the dense method: no unpartitioned row_number
     window (single-task funnel) anywhere in the dim build."""
-    from gravity_books_datalakehouse_spark.plans.star import build_star
+    from gravity_books_datalakehouse_spark.plans.star import _build_star_plans
 
-    dims = build_star(spark, SF, cache=False)
+    dims = _build_star_plans(spark, SF)
     for name in ("dim_customer", "dim_part", "dim_priority"):
         plan = dims[name]._jdf.queryExecution().executedPlan().toString()
         main_path = plan.split("BroadcastExchange")[0]
@@ -173,16 +174,71 @@ def test_char_shingles_feed_minhash(spark):
     assert by_doc[1] != by_doc[3]
 
 
+def _cached_rdds(spark) -> list[int]:
+    return [
+        info.id()
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if info.numCachedPartitions() > 0
+    ]
+
+
 def test_clear_session_caches_rebuilds_cleanly(spark):
-    from gravity_books_datalakehouse_spark.plans._cache import clear_session_caches
-    from gravity_books_datalakehouse_spark.plans.star import build_star, _STAR_CACHE
+    """Every memo is built, then cleared: the clear frees all the storage
+    the builds left cached before it returns (no sleep, no GC), empties
+    every registered memo, and the next call rebuilds the same answer.
+    RDDs cached before the test (other tests share the session) are left
+    out of the count."""
+    from gravity_books_datalakehouse_spark.operators import (
+        components,
+        dedup,
+        graph,
+        kmeans,
+        similarity,
+    )
+    from gravity_books_datalakehouse_spark.plans import advanced_queries
+    from gravity_books_datalakehouse_spark.plans._cache import (
+        MEMOS,
+        clear_session_caches,
+    )
+    from gravity_books_datalakehouse_spark.plans.star import build_star
+    from gravity_books_datalakehouse_spark.streaming import event_queries
     from tests.conftest import SF_SMOKE
 
-    n1 = build_star(spark, SF_SMOKE)["fact_sales"].count()
-    assert _STAR_CACHE
     clear_session_caches()
-    assert not _STAR_CACHE
+    earlier = set(_cached_rdds(spark))
+    n1 = build_star(spark, SF_SMOKE)["fact_sales"].count()
+    before = set(_cached_rdds(spark))
+    graph._cached_copurchase_edges(spark, SF_SMOKE)
+    # the pre-relayout checkpoint is freed: the edges memo pins one RDD
+    assert len(set(_cached_rdds(spark)) - before) == 1
+    for build in (
+        dedup._cached_shingles,
+        dedup._cached_bigrams,
+        dedup._cached_bigram_ids,
+        dedup.dedup_minhash_lsh_pairs,
+        dedup.dedup_substring_spans,
+        advanced_queries._pooled_cum,
+        kmeans._fitted_assignment,
+        similarity._signed_embeddings,
+        similarity._ivf_assigned,
+        components.dedup_clusters_connected_components,
+        components.dedup_cluster_persistence,
+        components.dedup_cluster_extraction,
+        event_queries._survival_user_frame,
+    ):
+        out = build(spark, SF_SMOKE)
+        if isinstance(out, DataFrame):
+            out.count()
+    components._dbscan_assign(spark, SF_SMOKE, components._DBSCAN_MIN_PTS).count()
+    assert all(m.entries for m in MEMOS.values()), [
+        name for name, m in MEMOS.items() if not m.entries
+    ]
+    assert set(_cached_rdds(spark)) - earlier
+    clear_session_caches()
+    assert set(_cached_rdds(spark)) - earlier == set()
+    assert not any(m.entries for m in MEMOS.values())
     assert build_star(spark, SF_SMOKE)["fact_sales"].count() == n1
+    clear_session_caches()
 
 
 def test_switching_scale_dir_evicts_previous_scale_cache(spark):
@@ -190,22 +246,21 @@ def test_switching_scale_dir_evicts_previous_scale_cache(spark):
     persisted star tables for every scale it touched: building at a new
     sf_dir evicts (and unpersists) the old sf_dir's entry."""
     from gravity_books_datalakehouse_spark.plans._cache import (
+        MEMOS,
         clear_session_caches,
     )
-    from gravity_books_datalakehouse_spark.plans.star import (
-        _STAR_CACHE,
-        build_star,
-    )
+    from gravity_books_datalakehouse_spark.plans.star import build_star
     from tests.conftest import SF_SMOKE
 
     other_sf = "/root/testdata/sf0.01"  # distinct from SF_SMOKE by design
+    star = MEMOS["star.build_star"]
     clear_session_caches()
     build_star(spark, SF_SMOKE)["dim_priority"].count()
-    first = next(iter(_STAR_CACHE.values()))
+    first, _ = next(iter(star.entries.values()))
     assert first["dim_priority"].storageLevel.useMemory
     build_star(spark, other_sf)["dim_priority"].count()
     # only the new scale remains, and the old entry was unpersisted
-    assert [k[1] for k in _STAR_CACHE] == [other_sf]
+    assert [k[1] for k in star.entries] == [other_sf]
     assert not first["dim_priority"].storageLevel.useMemory
     clear_session_caches()
 

@@ -11,7 +11,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from gravity_books_datalakehouse_spark.plans.star import build_star, q1_monthly_sales
+from gravity_books_datalakehouse_spark.plans.star import (
+    _build_star_plans,
+    build_star,
+    q1_monthly_sales,
+)
 from gravity_books_datalakehouse_spark.sources.catalog import load_table
 from tests.conftest import SF_SMOKE
 
@@ -80,7 +84,7 @@ def test_topk_plans_as_take_ordered(spark):
 
 
 def test_fact_build_has_no_fact_side_sort_merge(spark):
-    fact = build_star(spark, SF_SMOKE, cache=False)["fact_sales"]
+    fact = _build_star_plans(spark, SF_SMOKE)["fact_sales"]
     plan = _executed_plan(fact)
     # every dim lookup must broadcast; the only allowed shuffle-heavy join
     # is lineitem ⋈ orders, and at this size it broadcasts too
@@ -372,7 +376,14 @@ def test_repetition_pipeline_tokenizer_split_count_bounded(spark):
     plan must stay small and, critically, out of Filter nodes' lambda
     bodies. A regression reintroducing the inlining multiplies the count."""
     import __spark_entry__ as entry_mod
+    from gravity_books_datalakehouse_spark.plans._cache import (
+        clear_session_caches,
+    )
 
+    # pin the plan built from empty memos: a shingle/pair memo an earlier
+    # test already materialized prints both its AQE final and initial
+    # plans inside the InMemoryRelation, doubling the splits counted
+    clear_session_caches()
     qs = entry_mod.queries()
     df = qs["pipeline_curate_corpus"](spark, "/root/testdata/sf0.001")
     plan = str(df._jdf.queryExecution().optimizedPlan())
