@@ -52,7 +52,7 @@ def _assign(e: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
     BIT-EXACTNESS vs the fold it replaces: centroid literals are exact
     doubles; per (row, centroid) the squared-distance fold
     (CAST(x AS DOUBLE) - y)^2 summed LEFT-TO-RIGHT is reproduced by an
-    in-order cumulative sum (the pair_cosine_arrow contract, incl. the
+    in-order cumulative sum (similarity._inorder_cumsum, incl. the
     +0.0 head); the argmin is min over ascending-cid centroids by
     (d2, cid) — exactly the least(struct) fold — via np.argmin, whose
     first-minimum rule IS the min-cid tiebreak on the ascending-cid
@@ -69,6 +69,8 @@ def _assign(e: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
     import pyarrow as pa
 
     from gravity_books_datalakehouse_spark.operators.similarity import (
+        _decode_rows,
+        _inorder_cumsum,
         _np_pooled,
     )
 
@@ -81,22 +83,9 @@ def _assign(e: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
         k, d = C.shape
         chunk = max(1, (1 << 19) // (k * d))
         for batch in batches:
-            nb = batch.num_rows
             arr = batch.column(1)
-            off = arr.offsets.to_numpy(zero_copy_only=False)
-            if nb and not (off[1:] - off[:-1] == d).all():
-                raise ValueError(
-                    "kmeans _assign: embedding width differs from "
-                    f"centroid width {d}"
-                )
-            base = int(off[0]) if nb else 0
-            flat = (
-                np.asarray(arr.values, dtype=np.float32)[
-                    base : base + nb * d
-                ]
-                .astype(np.float64)
-                .reshape(nb, d)
-            )
+            flat = _decode_rows(arr, d, np.float64)
+            nb = len(flat)
             buf = _np_pooled("km_buf", chunk * k * d)[: chunk * k * d].reshape(
                 chunk, k, d
             )
@@ -108,9 +97,7 @@ def _assign(e: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
                 b1 = buf[:n]
                 np.subtract(xc[:, None, :], C[None, :, :], out=b1)
                 np.multiply(b1, b1, out=b1)
-                b1[..., 0] += 0.0
-                np.add.accumulate(b1, axis=-1, out=b1)
-                d2 = b1[..., -1]
+                d2 = _inorder_cumsum(b1)[..., -1]
                 if np.isnan(d2).any():
                     raise ValueError(
                         "kmeans _assign: NaN distance — non-finite "
@@ -119,8 +106,8 @@ def _assign(e: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
                 am = np.argmin(d2, axis=1)
                 out_cid[s : s + n] = cids[am]
                 out_d2[s : s + n] = d2[np.arange(n), am]
-            # copies, not pooled-buffer views — see pair_cosine_arrow's
-            # yield-time note (ADVICE r13 medium)
+            # copies, not pooled-buffer views — see
+            # similarity._pair_batches (ADVICE r13 medium)
             yield pa.record_batch(
                 {
                     "vec_id": batch.column(0),

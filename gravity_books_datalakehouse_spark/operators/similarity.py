@@ -1,6 +1,7 @@
 """Similarity search over embeddings (beyond-reference, SURVEY.md §2.8).
 
-Three operators over the ``embeddings`` table (``array<float>`` column):
+Operators over the ``embeddings`` table (``array<float>`` column), built
+on three core shapes:
 
 - **brute-force cosine top-k** — the correctness baseline: cross join of a
   bounded query set against the corpus, exact cosine, per-query window
@@ -12,10 +13,19 @@ Three operators over the ``embeddings`` table (``array<float>`` column):
 - **embedding near-dup pairs** — cosine ≥ τ pairs within LSH buckets:
   the embedding leg of the dedup suite (operators/dedup.py).
 
-Vector math uses ``zip_with`` + ``aggregate`` folds over DOUBLE — JVM-side
-codegen, no Python. The DuckDB oracle reproduces it exactly via
-``list_dot_product(embedding::DOUBLE[], …)`` (verified bit-equal; scores
-are additionally rounded to 6 dp in the output for belt-and-braces).
+Vector math comes in two forms, both bit-equal to the DuckDB oracles'
+``list_dot_product(embedding::DOUBLE[], …)`` (scores are additionally
+rounded to 6 dp in the output for belt-and-braces):
+
+- ``zip_with`` + ``aggregate`` folds over DOUBLE (``cosine``) score the
+  pairs a join produces (LSH/IVF buckets, range search, re-ranking);
+- every bounded-query-set × corpus scan (brute-force truth legs, the
+  quantized scorer, the Matryoshka ladder) runs through ONE Arrow batch
+  driver, ``_pair_scores``: a ``mapInArrow`` pass that decodes each
+  batch, scores it with NumPy (``_cosine_ladder`` or
+  ``_quantized_cosine``) and prunes it per task (``_prune_topk``). Its
+  docstring holds the bit-exactness and prune-losslessness contracts;
+  ``kmeans._assign`` reuses its decode and in-order-cumsum pieces.
 
 At 100 TB (billions of vectors) the same plans hold with two changes:
 raise the signature width (more buckets) and pre-partition the corpus by
@@ -23,6 +33,8 @@ bucket id so each executor owns whole buckets — noted per operator.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -79,17 +91,18 @@ _COS_SQL = (
 )
 
 
-def _inorder_rowsums(sq, out=None):
-    """In-order per-row sums of a (..., d) float64 array — bit-identical
-    to the ``aggregate(…, 0.0, (acc, x) -> acc + x)`` fold: cumsum adds
-    left-to-right exactly like the fold, and the ``+ 0.0`` on the head
-    element reproduces the fold's ``0.0 + x_1`` first step (which turns
-    a -0.0 head into +0.0; every later add is unaffected)."""
+def _inorder_cumsum(a):
+    """In-place in-order cumulative sums along the last axis of a float64
+    array — bit-identical to the ``aggregate(…, 0.0, (acc, x) -> acc + x)``
+    fold at every position: cumsum adds left-to-right exactly like the
+    fold, and the ``+ 0.0`` on the head element reproduces the fold's
+    ``0.0 + x_1`` first step (which turns a -0.0 head into +0.0; every
+    later add is unaffected). Column ``j`` of the result is the fold of
+    the first j+1 elements; the last column is the full fold."""
     import numpy as np
 
-    sq[..., 0] += 0.0
-    acc = np.add.accumulate(sq, axis=-1, out=sq if out is None else out)
-    return acc[..., -1]
+    a[..., 0] += 0.0
+    return np.add.accumulate(a, axis=-1, out=a)
 
 
 #: Executor-side NumPy buffer pool, keyed by (tag, shape/dtype). Lives at
@@ -114,6 +127,23 @@ def _np_pooled(tag: str, n: int, dtype="float64"):
     return _NP_POOL[tag]
 
 
+def _decode_rows(arr, d: int, dtype):
+    """(nb, d) ``dtype`` matrix of an Arrow list column whose rows all
+    have width ``d``. Honors a sliced ``ListArray`` (``arr.values`` is
+    the UNSLICED child, so the rows start at ``offsets[0]``). A row of
+    another width (or a NULL vector) raises: the fold path would emit
+    NULL scores there (``zip_with`` pads), a data-contract violation
+    that must fail loudly rather than silently diverge from it."""
+    import numpy as np
+
+    nb = len(arr)
+    off = arr.offsets.to_numpy(zero_copy_only=False)
+    if nb and not (off[1:] - off[:-1] == d).all():
+        raise ValueError(f"vector width differs from the expected width {d}")
+    base = int(off[0]) if nb else 0
+    return np.asarray(arr.values.slice(base, nb * d), dtype=dtype).reshape(nb, d)
+
+
 #: Rounding-safe margin for the in-kernel top-k prune: two doubles more
 #: than 2e-6 apart can never round to the same 6-dp value, so a row
 #: beaten by >= k batch-mates by MORE than this margin loses under the
@@ -122,294 +152,205 @@ def _np_pooled(tag: str, n: int, dtype="float64"):
 _PRUNE_MARGIN = 2e-6
 
 
-def pair_cosine_arrow(
+def _prune_topk(scores: list, k: int | None):
+    """Boolean (nb, m) keep-mask of the per-batch, per-query top-k
+    prune over one or more (nb, m) score matrices, or None (keep every
+    row) when ``k`` is None or the batch has <= k rows. A row is kept
+    if, in ANY score matrix, it is within ``_PRUNE_MARGIN`` of that
+    query's k-th largest score in the batch (the union over score
+    columns). Losslessness is argued on ``_pair_scores``.
+
+    A NaN score raises: ``np.partition`` would make the threshold NaN,
+    and ``cs >= NaN - margin`` is all-False, so the query's rows would
+    silently vanish. A NaN here means a zero-norm or non-finite vector
+    — a broken input, exactly as in ``kmeans._assign``."""
+    import numpy as np
+
+    if k is None:
+        return None
+    nb = len(scores[0])
+    keep = None
+    for cs in scores:
+        if np.isnan(cs).any():
+            raise ValueError(
+                "NaN pair score (zero-norm or non-finite vector): the "
+                "top-k prune cannot rank it"
+            )
+        if nb > k:
+            th = np.partition(cs, nb - k, axis=0)[nb - k]
+            hit = cs >= th - _PRUNE_MARGIN
+            keep = hit if keep is None else keep | hit
+    return keep
+
+
+def _cosine_ladder(dims: tuple, Q, X) -> list:
+    """[cosine over the first d dims for d in ``dims``] + [full-width
+    cosine], each (nb, m), for float64 query rows Q (m, d) against
+    corpus rows X (nb, d). Per pair the element products run once; each
+    rung's dot and both its squared norms are PREFIXES of one in-order
+    cumsum — the in-order fold of the slice (same products, same
+    left-to-right adds, same +0.0 head). The full-width rung reads the
+    last column and never slices. Products run in ~4 MB slabs of pooled
+    scratch (see _NP_POOL); the returned matrices are pooled views."""
+    import numpy as np
+
+    nb, (m, d) = len(X), Q.shape
+    at = [k - 1 for k in dims] + [d - 1]  # cumsum column closing each rung
+    qcum = _inorder_cumsum(Q * Q)
+    xcum = _inorder_cumsum(X * X)
+    qn = [np.sqrt(qcum[:, j]) for j in at]
+    xn = [np.sqrt(xcum[:, j]) for j in at]
+    outs = [
+        _np_pooled(f"pair_cs{i}", nb * m)[: nb * m].reshape(nb, m)
+        for i in range(len(at))
+    ]
+    chunk = max(1, (1 << 19) // (m * d))
+    buf = _np_pooled("pair_buf", chunk * m * d)[: chunk * m * d].reshape(
+        chunk, m, d
+    )
+    den = _np_pooled("pair_den", chunk * m)[: chunk * m].reshape(chunk, m)
+    for s in range(0, nb, chunk):
+        n = min(chunk, nb - s)
+        b, dn = buf[:n], den[:n]
+        np.multiply(X[s : s + n, None, :], Q[None, :, :], out=b)
+        _inorder_cumsum(b)
+        for j, qj, xj, out in zip(at, qn, xn, outs):
+            np.multiply(xj[s : s + n, None], qj[None, :], out=dn)
+            np.divide(b[..., j], dn, out=out[s : s + n])
+    return outs
+
+
+def _quantized_cosine(Q, X) -> list:
+    """[cosine of int64 query rows Q (m, d) against int64 corpus rows
+    X (nb, d)] — exact with no ordering argument at all: int64 sums are
+    EXACT in any order, the int64 → double cast is exact
+    (|dot| <= 127²·d << 2^53), and the sqrt/multiply/divide that remain
+    are the same IEEE expressions as the fold."""
+    import numpy as np
+
+    qn = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
+    xn = np.sqrt((X * X).sum(axis=1).astype(np.float64))
+    return [(X @ Q.T).astype(np.float64) / (qn[None, :] * xn[:, None])]
+
+
+def _pair_batches(batches, qids, Q, score, names: list, per_task_topk):
+    """The ``mapInArrow`` body of ``_pair_scores``: per ``(nid, vector)``
+    Arrow batch, decode the vectors to Q's dtype, score them against
+    every query, prune, and emit (qid, nid, *names) rows in (nid, qid)
+    order. The yielded columns are COPIES (``flatten`` / mask indexing)
+    of any pooled score buffer (ADVICE r13 medium): a zero-copy
+    ``pa.array`` over _NP_POOL memory is only safe if the serializer
+    writes each batch before the generator resumes."""
+    import numpy as np
+    import pyarrow as pa
+
+    m, d = Q.shape
+    for batch in batches:
+        nid = batch.column(0).to_numpy(zero_copy_only=False)
+        nb = len(nid)
+        scores = score(Q, _decode_rows(batch.column(1), d, Q.dtype))
+        keep = _prune_topk(scores, per_task_topk)
+        cols = [
+            np.broadcast_to(qids[None, :], (nb, m)),
+            np.broadcast_to(nid[:, None], (nb, m)),
+            *scores,
+        ]
+        yield pa.record_batch(
+            [pa.array(c.flatten() if keep is None else c[keep]) for c in cols],
+            names=["qid", "nid", *names],
+        )
+
+
+def _pair_scores(
     corpus: DataFrame,
+    vec_col: str,
     q_ids: list,
-    q_vecs: list,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_name: str = "qid",
-    nid_name: str = "nid",
-    out_name: str = "cs",
-    per_task_topk: int | None = None,
+    Q,
+    score,
+    names: list,
+    per_task_topk: int | None,
 ) -> DataFrame:
-    """(qid, nid, cs) full-precision cosine of every (query, corpus-row)
-    pair, as ONE vectorized ``mapInArrow`` pass over the corpus scan —
-    the guide-§4.2 shape (whole Arrow batches into NumPy) replacing the
+    """(qid, nid, *names) scores of every (query, corpus-row) pair as
+    ONE vectorized ``mapInArrow`` pass over the corpus scan — the
+    guide-§4.2 shape (whole Arrow batches into NumPy) replacing the
     interpreted per-pair ``zip_with``/``aggregate`` fold, which has no
     codegen and costs ~7 µs/pair (measured round 13: 400 k pairs 10.3 s
-    JVM fold vs 0.56 s here, bit-equal).
+    JVM fold vs 0.56 s here, bit-equal). ``score(Q, X)`` returns one
+    (nb, m) matrix per name: ``_cosine_ladder`` or ``_quantized_cosine``.
 
     BIT-EXACTNESS CONTRACT (why every consumer's oracle hash is safe):
-    float32 → float64 casts are exact on both paths; per-element
-    products are one IEEE multiply each; the dot and both squared-norm
-    folds run LEFT-TO-RIGHT via ``np.add.accumulate`` (sequential by
-    definition — see _inorder_rowsums for the 0.0-head detail), exactly
+    float32 → float64 widening is exact on both paths; per-element
+    products are one IEEE multiply each; dots and squared norms are
+    LEFT-TO-RIGHT folds via ``np.add.accumulate`` (sequential by
+    definition — see _inorder_cumsum for the 0.0-head detail), exactly
     the ``aggregate`` fold's order; the denominator is one multiply
     (IEEE multiplication is bitwise commutative) and one division.
     Verified bit-equal against the fold on all 399 800 sf0.1 pairs.
+    The int64 scorer needs no ordering argument (_quantized_cosine).
 
     SCALE CONTRACT: the query side is the op's bounded |Q| set that the
     previous plan already shipped through ``F.broadcast(q)`` — a driver
     collect either way; the corpus is never shuffled (mapInArrow is a
     narrow map over the scan, and only ``(id, vec)`` columns cross the
-    Python boundary). Per-task buffers are allocated once and reused
-    across batches (guide §4.5); peak extra memory is
-    chunk × |Q| × d × 8 B (~6 MB at the defaults).
+    Python boundary). Scratch buffers are pooled across batches and
+    tasks (guide §4.5).
 
-    ``per_task_topk=K`` (round 14, VERDICT r13 item 7) emits, per Arrow
-    batch and per query, only the rows whose cosine is within
-    ``_PRUNE_MARGIN`` of the batch's K-th largest — a LOSSLESS prune
-    for every consumer that window-ranks per qid by (cs DESC, nid ASC)
-    and keeps rank <= K' <= K: a dropped row is beaten by >= K
+    PRUNE CONTRACT: ``per_task_topk=K`` emits, per Arrow batch and per
+    query, only the rows ``_prune_topk`` keeps — those within
+    ``_PRUNE_MARGIN`` of the batch's K-th largest score in at least one
+    score column. LOSSLESS for every consumer that window-ranks per
+    (score column, qid) by (score DESC, nid ASC) and keeps
+    rank <= K' <= K: a dropped row is beaten in that column by >= K
     batch-mates by MORE than the margin, so it loses under the raw
-    comparator (cosine values are untouched — the kept rows are
-    bit-identical) and under any 6-dp-rounded one (values > 2e-6 apart
-    cannot round equal). Callers that pre-filter the self pair
-    (qid != nid) pass K = k + 1. At the 20x-replica scale this turns
-    the |Q| x N window input into |Q| x (K+ties) per batch.
-    """
+    comparator (scores are untouched — the kept rows are bit-identical)
+    and under any 6-dp-rounded one (values > 2e-6 apart cannot round
+    equal). It is the threshold-based top-k pruning of incremental
+    top-k similarity search (EDBT 2020; REPOSE, ICDE 2021). Callers
+    that pre-filter the self pair (qid != nid) pass K = k + 1. At the
+    20x-replica scale this turns the |Q| x N window input into
+    |Q| x (K + ties) per batch. A NaN score raises instead of silently
+    dropping a query's rows."""
     import numpy as np
-    import pyarrow as pa
 
-    schema = f"{qid_name} long, {nid_name} long, {out_name} double"
+    schema = "qid long, nid long, " + ", ".join(f"{c} double" for c in names)
     if not q_ids:
         return corpus.sparkSession.createDataFrame([], schema)
-    qids_l = [int(i) for i in q_ids]
-    qvecs_l = [[float(x) for x in v] for v in q_vecs]
+    qids = np.asarray(q_ids, dtype=np.int64)
 
     def fn(batches):
-        qids = np.asarray(qids_l, dtype=np.int64)
-        Q = np.asarray(qvecs_l, dtype=np.float64)
-        m, d = Q.shape
-        qn = np.sqrt(_inorder_rowsums(Q * Q))
-        # slabs sized ~4 MB: big enough to vectorize, small enough that a
-        # fresh worker's one-time first-touch stays cheap (see _NP_POOL)
-        chunk = max(1, (1 << 19) // (m * d))
-        for batch in batches:
-            nid = batch.column(0).to_numpy(zero_copy_only=False)
-            nb = len(nid)
-            arr = batch.column(1)
-            off = arr.offsets.to_numpy(zero_copy_only=False)
-            if nb and not (off[1:] - off[:-1] == d).all():
-                # Width mismatch vs the query vectors: the fold path
-                # would emit NULL cosines here (zip_with pads); that is
-                # a data-contract violation, so fail loudly instead of
-                # silently diverging from it.
-                raise ValueError(
-                    "pair_cosine_arrow: corpus embedding width differs "
-                    f"from query width {d}"
-                )
-            base = int(off[0]) if nb else 0  # honor a sliced ListArray
-            flat = (
-                np.asarray(arr.values, dtype=np.float32)[
-                    base : base + nb * d
-                ]
-                .astype(np.float64)
-                .reshape(nb, d)
-            )
-            xn = np.sqrt(_inorder_rowsums(flat * flat))
-            buf = _np_pooled("pc_buf", chunk * m * d)[: chunk * m * d].reshape(
-                chunk, m, d
-            )
-            den = _np_pooled("pc_den", chunk * m)[: chunk * m].reshape(chunk, m)
-            out_nid = _np_pooled("pc_nid", nb * m, "int64")
-            out_cs = _np_pooled("pc_cs", nb * m)
-            out_qid = _np_pooled("pc_qid", nb * m, "int64")
-            out_qid[: nb * m].reshape(nb, m)[:] = qids[None, :]
-            out_nid[: nb * m].reshape(nb, m)[:] = nid[:, None]
-            cs_all = out_cs[: nb * m].reshape(nb, m)
-            for s in range(0, nb, chunk):
-                xc = flat[s : s + chunk]
-                n = len(xc)
-                b1 = buf[:n]
-                dn = den[:n]
-                np.multiply(xc[:, None, :], Q[None, :, :], out=b1)
-                dots = _inorder_rowsums(b1)
-                np.multiply(xn[s : s + n, None], qn[None, :], out=dn)
-                np.divide(dots, dn, out=cs_all[s : s + n])
-            # COPY the yielded columns out of the pooled buffers (ADVICE
-            # r13 medium): a zero-copy pa.array over _NP_POOL memory is
-            # only safe if the serializer writes each batch before the
-            # generator resumes; a buffering/prefetching consumer would
-            # silently read overwritten data. The copies are output-sized
-            # (nb*m*8 B) — negligible vs the kernel math; pooled buffers
-            # remain for the INTERMEDIATE math only (buf/den).
-            if per_task_topk is not None and nb > per_task_topk:
-                # per-batch per-query top-k prune (see docstring): keep
-                # rows within _PRUNE_MARGIN of the K-th largest cosine.
-                # Fancy indexing copies, so nothing aliases the pool.
-                th = np.partition(
-                    cs_all, nb - per_task_topk, axis=0
-                )[nb - per_task_topk]
-                keep = (cs_all >= th - _PRUNE_MARGIN).ravel()
-                yield pa.record_batch(
-                    {
-                        qid_name: pa.array(out_qid[: nb * m][keep]),
-                        nid_name: pa.array(out_nid[: nb * m][keep]),
-                        out_name: pa.array(cs_all.ravel()[keep]),
-                    }
-                )
-                continue
-            yield pa.record_batch(
-                {
-                    qid_name: pa.array(out_qid[: nb * m].copy()),
-                    nid_name: pa.array(out_nid[: nb * m].copy()),
-                    out_name: pa.array(cs_all.flatten()),
-                }
-            )
+        return _pair_batches(batches, qids, Q, score, names, per_task_topk)
 
-    narrow = corpus.select(
-        F.col(id_col).cast("long").alias(nid_name), F.col(vec_col)
-    )
-    return narrow.mapInArrow(fn, schema=schema)
+    return corpus.select(
+        F.col("vec_id").cast("long").alias("nid"), F.col(vec_col)
+    ).mapInArrow(fn, schema=schema)
 
 
-def pair_cosine_prefix_arrow(
+def pair_cosine_arrow(
     corpus: DataFrame,
     q_ids: list,
     q_vecs: list,
-    dims: tuple,
     *,
-    id_col: str = "vec_id",
+    dims: tuple = (),
     vec_col: str = "embedding",
+    out_name: str = "cs",
     per_task_topk: int | None = None,
 ) -> DataFrame:
-    """(qid, nid, c{d}..., cfull): cosine over each dim-PREFIX in ``dims``
-    plus the full-width cosine, one row per (query, corpus-row) pair —
-    the Matryoshka ladder's scoring stage as one vectorized mapInArrow
-    pass. Bit-exact twin of the slice-folds: a prefix of the in-order
-    cumsum IS the in-order fold of the slice (same products, same
-    left-to-right adds, same +0.0 head), so every c{d} equals the
-    ``aggregate(slice(...))`` column it replaces, and cfull folds the
-    WHOLE width (never a slice — the ADVICE r12 item-3 contract).
-    Same scale/buffer story as pair_cosine_arrow.
-
-    ``per_task_topk=K`` (round 14): per batch and per query, keep the
-    UNION over every rung (each c{d} plus cfull) of the rows within
-    ``_PRUNE_MARGIN`` of that rung's K-th largest — lossless for
-    consumers that window-rank per (rung, qid) by (cos DESC, nid ASC)
-    with rank <= K' <= K, by the pair_cosine_arrow prune argument
-    applied rung by rung (kept rows' values untouched)."""
+    """(qid, nid, c{d}..., ``out_name``): full-precision cosine of every
+    (query, corpus-row) pair over each dim-PREFIX in ``dims`` (the
+    Matryoshka ladder) plus the full width, bit-identical to the
+    ``aggregate`` folds (``cosine`` / the slice-folds) — see
+    ``_pair_scores`` for the exactness, scale and prune contracts."""
     import numpy as np
-    import pyarrow as pa
 
-    cols = ", ".join(f"c{d} double" for d in dims)
-    schema = f"qid long, nid long, {cols}, cfull double"
-    if not q_ids:
-        return corpus.sparkSession.createDataFrame([], schema)
-    qids_l = [int(i) for i in q_ids]
-    qvecs_l = [[float(x) for x in v] for v in q_vecs]
-    dims_l = [int(d) for d in dims]
-
-    def fn(batches):
-        qids = np.asarray(qids_l, dtype=np.int64)
-        Q = np.asarray(qvecs_l, dtype=np.float64)
-        m, d = Q.shape
-        qsq = Q * Q
-        qsq[:, 0] += 0.0
-        qcum = np.add.accumulate(qsq, axis=1)
-        qn_at = {k: np.sqrt(qcum[:, k - 1]) for k in dims_l}
-        qn_full = np.sqrt(qcum[:, -1])
-        chunk = max(1, (1 << 19) // (m * d))
-        for batch in batches:
-            nid = batch.column(0).to_numpy(zero_copy_only=False)
-            nb = len(nid)
-            arr = batch.column(1)
-            off = arr.offsets.to_numpy(zero_copy_only=False)
-            if nb and not (off[1:] - off[:-1] == d).all():
-                raise ValueError(
-                    "pair_cosine_prefix_arrow: corpus embedding width "
-                    f"differs from query width {d}"
-                )
-            base = int(off[0]) if nb else 0
-            flat = (
-                np.asarray(arr.values, dtype=np.float32)[
-                    base : base + nb * d
-                ]
-                .astype(np.float64)
-                .reshape(nb, d)
-            )
-            xsq = flat * flat
-            if nb:
-                xsq[:, 0] += 0.0
-            xcum = np.add.accumulate(xsq, axis=1)
-            xn_at = {k: np.sqrt(xcum[:, k - 1]) for k in dims_l}
-            xn_full = np.sqrt(xcum[:, -1])
-            buf = _np_pooled("pp_buf", chunk * m * d)[: chunk * m * d].reshape(
-                chunk, m, d
-            )
-            den = _np_pooled("pp_den", chunk * m)[: chunk * m].reshape(chunk, m)
-            out_qid = _np_pooled("pp_qid", nb * m, "int64")
-            out_nid = _np_pooled("pp_nid", nb * m, "int64")
-            out_qid[: nb * m].reshape(nb, m)[:] = qids[None, :]
-            out_nid[: nb * m].reshape(nb, m)[:] = nid[:, None]
-            outs = {
-                k: _np_pooled(f"pp_c{k}", nb * m) for k in dims_l
-            }
-            out_full = _np_pooled("pp_cfull", nb * m)
-            for s in range(0, nb, chunk):
-                xc = flat[s : s + chunk]
-                n = len(xc)
-                b1 = buf[:n]
-                dn = den[:n]
-                np.multiply(xc[:, None, :], Q[None, :, :], out=b1)
-                b1[..., 0] += 0.0
-                np.add.accumulate(b1, axis=-1, out=b1)
-                for k in dims_l:
-                    np.multiply(
-                        xn_at[k][s : s + n, None], qn_at[k][None, :], out=dn
-                    )
-                    np.divide(
-                        b1[..., k - 1],
-                        dn,
-                        out=outs[k][: nb * m].reshape(nb, m)[s : s + n],
-                    )
-                np.multiply(
-                    xn_full[s : s + n, None], qn_full[None, :], out=dn
-                )
-                np.divide(
-                    b1[..., -1],
-                    dn,
-                    out=out_full[: nb * m].reshape(nb, m)[s : s + n],
-                )
-            # copies, not pooled-buffer views — see pair_cosine_arrow's
-            # yield-time note (ADVICE r13 medium)
-            if per_task_topk is not None and nb > per_task_topk:
-                # union-of-rungs per-batch top-k prune (see docstring);
-                # fancy indexing copies, nothing aliases the pool
-                keepm = None
-                for col in [outs[k] for k in dims_l] + [out_full]:
-                    csk = col[: nb * m].reshape(nb, m)
-                    th = np.partition(
-                        csk, nb - per_task_topk, axis=0
-                    )[nb - per_task_topk]
-                    km = csk >= th - _PRUNE_MARGIN
-                    keepm = km if keepm is None else (keepm | km)
-                keep = keepm.ravel()
-                data = {
-                    "qid": pa.array(out_qid[: nb * m][keep]),
-                    "nid": pa.array(out_nid[: nb * m][keep]),
-                }
-                for k in dims_l:
-                    data[f"c{k}"] = pa.array(outs[k][: nb * m][keep])
-                data["cfull"] = pa.array(out_full[: nb * m][keep])
-                yield pa.record_batch(data)
-                continue
-            data = {
-                "qid": pa.array(out_qid[: nb * m].copy()),
-                "nid": pa.array(out_nid[: nb * m].copy()),
-            }
-            for k in dims_l:
-                data[f"c{k}"] = pa.array(outs[k][: nb * m].copy())
-            data["cfull"] = pa.array(out_full[: nb * m].copy())
-            yield pa.record_batch(data)
-
-    narrow = corpus.select(
-        F.col(id_col).cast("long").alias("nid"), F.col(vec_col)
+    return _pair_scores(
+        corpus,
+        vec_col,
+        q_ids,
+        np.asarray(q_vecs, dtype=np.float64),
+        partial(_cosine_ladder, tuple(dims)),
+        [f"c{d}" for d in dims] + [out_name],
+        per_task_topk,
     )
-    return narrow.mapInArrow(fn, schema=schema)
 
 
 def collect_query_vectors(df: DataFrame, id_col: str, vec_col: str):
@@ -844,7 +785,7 @@ def sim_label_centroids(spark, sf_dir):
     )
 
 
-_QUANT_SQL = """
+_QUANT_SQL = f"""
     WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS v,
              list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS s
@@ -859,15 +800,38 @@ _QUANT_SQL = """
              (sqrt(list_dot_product(a.q::DOUBLE[], a.q::DOUBLE[])) *
               sqrt(list_dot_product(b.q::DOUBLE[], b.q::DOUBLE[]))) AS cos_q
       FROM qv a, qv b
-      WHERE a.vec_id < 10 AND a.vec_id != b.vec_id
+      WHERE a.vec_id < {_TOPK_QUERIES} AND a.vec_id != b.vec_id
     )
     SELECT qid, nid, rank, ROUND(cos_q, 6) AS cos_sim_q FROM (
       SELECT qid, nid, cos_q,
              row_number() OVER (PARTITION BY qid
                                 ORDER BY cos_q DESC, nid ASC) AS rank
       FROM pairs
-    ) WHERE rank <= 5
+    ) WHERE rank <= {_TOPK}
 """
+
+
+def _quantized(e: DataFrame) -> DataFrame:
+    """(vec_id, q): per-vector int8-range quantization
+    q_i = floor(x_i * 127 / max|x| + 0.5) as bigints. The scale is
+    materialized behind a projection first — inlining array_max into
+    the transform would recompute it per element (O(d²) per vector)."""
+    base = e.select(
+        "vec_id",
+        "embedding",
+        F.array_max(
+            F.transform("embedding", lambda x: F.abs(x.cast("double")))
+        ).alias("s"),
+    )
+    return base.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: F.floor(
+                x.cast("double") * (F.lit(127.0) / F.col("s")) + F.lit(0.5)
+            ).cast("bigint"),
+        ).alias("q"),
+    )
 
 
 @register("sim_quantized_topk", _QUANT_SQL)
@@ -887,93 +851,27 @@ def sim_quantized_topk(spark, sf_dir):
     by construction.
 
     The scale max|x| is materialized behind a projection before the
-    per-element lambda references it — inlining array_max into the
-    transform would recompute it per element (O(d²) per vector)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    base = e.select(
-        "vec_id",
-        "embedding",
-        F.array_max(
-            F.transform("embedding", lambda x: F.abs(x.cast("double")))
-        ).alias("s"),
-    )
-    qv = base.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(
-                x.cast("double") * (F.lit(127.0) / F.col("s")) + F.lit(0.5)
-            ).cast("bigint"),
-        ).alias("q"),
-    )
-    # Round 14 (guide §4.2 — the r13 pair_cosine_arrow finding applied
-    # to the quantized scorer): the broadcast cross join evaluated THREE
-    # interpreted zip_with/aggregate folds per pair (~7 µs each, no
-    # codegen). The integer dots now run as one vectorized mapInArrow
-    # pass over the quantized corpus. Bit-exactness here needs no
-    # ordering argument at all: int64 sums are EXACT in any order, the
-    # int64→double cast is exact (|dot| ≤ 127²·d « 2^53), and the
-    # remaining sqrt/multiply/divide are the identical IEEE expressions.
-    # The quantization itself (floor(x·127/max|x| + 0.5)) stays in
-    # Spark, unchanged. Pruned per task to the window's k (+1 for the
-    # self pair) under the standard margin — lossless per the
-    # pair_cosine_arrow prune contract.
-    qrows = qv.filter(F.col("vec_id") < 10).select("vec_id", "q").collect()
-    qrows.sort(key=lambda r: r[0])
-    q_ids = [int(r[0]) for r in qrows]
-    q_vecs = [[int(x) for x in r[1]] for r in qrows]
-
+    per-element lambda references it (_quantized)."""
+    qv = _quantized(load_table(spark, sf_dir, "embeddings"))
+    # The integer dots run through the shared Arrow pair driver with the
+    # exact int64 scorer: as zip_with/aggregate folds they are
+    # interpreted (~7 µs per pair, no codegen). The quantization stays
+    # in Spark. Pruned per task to the window's k (+1 for the self
+    # pair) — lossless per the _pair_scores prune contract.
     import numpy as np
-    import pyarrow as pa
 
-    def fn(batches):
-        qids = np.asarray(q_ids, dtype=np.int64)
-        Q = np.asarray(q_vecs, dtype=np.int64)
-        m, d = Q.shape
-        qn = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
-        for batch in batches:
-            nid = batch.column(0).to_numpy(zero_copy_only=False)
-            nb = len(nid)
-            arr = batch.column(1)
-            off = arr.offsets.to_numpy(zero_copy_only=False)
-            if nb and not (off[1:] - off[:-1] == d).all():
-                raise ValueError(
-                    "sim_quantized_topk: corpus width differs from "
-                    f"query width {d}"
-                )
-            base_ = int(off[0]) if nb else 0
-            X = np.asarray(arr.values, dtype=np.int64)[
-                base_ : base_ + nb * d
-            ].reshape(nb, d)
-            dots = X @ Q.T  # exact int64
-            xn = np.sqrt((X * X).sum(axis=1).astype(np.float64))
-            cs = dots.astype(np.float64) / (qn[None, :] * xn[:, None])
-            out_qid = np.broadcast_to(qids[None, :], (nb, m)).ravel()
-            out_nid = np.broadcast_to(nid[:, None], (nb, m)).ravel()
-            flat = cs.ravel()
-            k1 = 6  # window top-5 + the self pair filtered downstream
-            if nb > k1:
-                th = np.partition(cs, nb - k1, axis=0)[nb - k1]
-                keep = (cs >= th - _PRUNE_MARGIN).ravel()
-                out_qid, out_nid, flat = (
-                    out_qid[keep], out_nid[keep], flat[keep]
-                )
-            yield pa.record_batch(
-                {
-                    "qid": pa.array(np.ascontiguousarray(out_qid)),
-                    "nid": pa.array(np.ascontiguousarray(out_nid)),
-                    "cos_q": pa.array(np.ascontiguousarray(flat)),
-                }
-            )
-
-    pairs = qv.select(
-        F.col("vec_id").cast("long").alias("nid"), "q"
-    ).mapInArrow(fn, schema="qid long, nid long, cos_q double")
+    q_ids, q_vecs = collect_query_vectors(
+        qv.filter(F.col("vec_id") < _TOPK_QUERIES), "vec_id", "q"
+    )
+    pairs = _pair_scores(
+        qv, "q", q_ids, np.asarray(q_vecs, dtype=np.int64),
+        _quantized_cosine, ["cos_q"], _TOPK + 1,
+    )
     w = Window.partitionBy("qid").orderBy(F.desc("cos_q"), F.asc("nid"))
     return (
         pairs.filter(F.col("qid") != F.col("nid"))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        .filter(F.col("rank") <= _TOPK)
         .select("qid", "nid", "rank", F.round("cos_q", 6).alias("cos_sim_q"))
     )
 
@@ -2583,7 +2481,7 @@ def sim_matryoshka_truncation(spark, sf_dir):
 
     Scale shape (round 13, guide §4.2): the |Q| queries feed ONE
     vectorized mapInArrow pass over the corpus scan
-    (pair_cosine_prefix_arrow) — per pair the element products run once
+    (pair_cosine_arrow with dims) — per pair the element products run once
     and every level's dot is a PREFIX of one in-order cumulative sum,
     bit-identical to the per-level slice-folds it replaces (same
     products, same left-to-right adds; the full-width rung never
@@ -2602,13 +2500,10 @@ def sim_matryoshka_truncation(spark, sf_dir):
     q_ids, q_vecs = collect_query_vectors(
         e.filter(F.col("vec_id") < _TOPK_QUERIES), "vec_id", "embedding"
     )
-    scored = (
-        pair_cosine_prefix_arrow(
-            e, q_ids, q_vecs, tuple(trunc), per_task_topk=_TOPK + 1
-        )
-        .filter(F.col("qid") != F.col("nid"))
-        .withColumnRenamed("cfull", "cf")
-    )
+    scored = pair_cosine_arrow(
+        e, q_ids, q_vecs, dims=tuple(trunc), out_name="cf",
+        per_task_topk=_TOPK + 1,
+    ).filter(F.col("qid") != F.col("nid"))
     pairs = scored.select(
         "qid",
         "nid",
